@@ -89,15 +89,19 @@ def main(spec_path: str, out_path: str) -> None:
             break
     measured_s = time.perf_counter() - start
     ctx.pass_idx = -1  # post-run checks count as attempts, not timings
+    t3 = time.perf_counter()
     wl.finish(ctx)
+    t4 = time.perf_counter()
     rss = peak_rss_mb(spark)
     app_id = spark.sparkContext.applicationId
     spark.stop()
+    t5 = time.perf_counter()
     out = {
         "cold": {"import_s": ti - t0, "get_spark_s": t1 - ti, "warm_s": t2 - t1},
         "setups": setups,
         "passes": passes,
         "measured_s": measured_s,
+        "phases_s": {"finish": t4 - t3, "stop": t5 - t4},
         "ops": ctx.ops,
         "facts": ctx.facts,
         "spans": rec.spans,

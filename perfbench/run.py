@@ -5,7 +5,7 @@
 Run from the root of a checkout. Inputs are generated from the seed and
 their expected results computed with DuckDB before anything is timed;
 the workload then runs in a child interpreter with its own JVM
-(``local[<cpus>]``), one closed-loop client. The last stdout line is
+(``local[1]``), one closed-loop client. The last stdout line is
 ``{"correct", "attempted", "failed", "metrics"}``: end-to-end metrics
 with ``--trace 0``, per-layer metrics with ``--trace 1`` (which also
 writes a span file under ``.perfbench_spans/``). Everything the run
@@ -29,6 +29,12 @@ ROOT = os.path.dirname(HERE)
 PACKAGE = "census_asc5_data_pipeline_spark"
 DEADLINE_S = 170.0  # the whole run, inputs and teardown included
 DRIVER_MEM = "2g"
+# Spark task threads (local[1]). The inputs are a few hundred KB, so a
+# second task thread adds no speed; it only competes with the JVM's
+# compiler and GC threads, the driver interpreter and the Python workers
+# for the host's few CPUs. On a 4-CPU host local[1] ran both workloads
+# at least as fast as local[2] and local[4].
+TASK_THREADS = 1
 
 
 def _child_env(work: str, trace: bool) -> dict:
@@ -36,7 +42,7 @@ def _child_env(work: str, trace: bool) -> dict:
     env["PYTHONPATH"] = os.pathsep.join(
         p for p in (ROOT, env.get("PYTHONPATH")) if p
     )
-    env["SPARK_GRAFT_CPUS"] = str(len(os.sched_getaffinity(0)))
+    env["SPARK_GRAFT_CPUS"] = str(TASK_THREADS)
     env["SPARK_GRAFT_DRIVER_MEM"] = DRIVER_MEM
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
@@ -104,7 +110,9 @@ def run(args: argparse.Namespace, work: str, started: float) -> dict:
     from spans import write_spans
 
     wl = workloads.WORKLOADS[args.workload]
+    t_prep = time.monotonic()
     spec = wl.prepare(args.seed, work)
+    t_child = time.monotonic()
     spec.update(
         workload=args.workload,
         seed=args.seed,
@@ -131,6 +139,7 @@ def run(args: argparse.Namespace, work: str, started: float) -> dict:
     finally:
         _stop_group(child.pid, grace_s=10.0 if code is not None else 0.0)
         child.wait()
+    t_done = time.monotonic()
     if code != 0:
         raise RuntimeError(f"workload child exited with {code}")
     with open(out_path) as fh:
@@ -142,6 +151,11 @@ def run(args: argparse.Namespace, work: str, started: float) -> dict:
         params=spec["params"],
         input=spec["input"],
     )
+    detail["phases_s"] = {
+        "prepare": t_child - t_prep,
+        "child": t_done - t_child,
+        **raw["phases_s"],
+    }
     if args.trace:
         layers, spans = report.per_layer(
             raw, report.event_log_path(work, raw["app_id"])
