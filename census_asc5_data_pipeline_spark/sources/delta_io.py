@@ -49,9 +49,13 @@ How this reader maps it to Spark — scale notes:
 
 The writer emits protocol (1, 2), metaData with the Spark schema
 JSON (Delta's ``schemaString`` IS Spark's ``StructType.json()``),
-and add/remove actions; commits are put-if-absent (``os.link`` —
-fails on an existing version, the protocol's optimistic-concurrency
-primitive) so two racing writers can't both claim a version.
+and add/remove actions. Every commit — writes, DML, OPTIMIZE,
+RESTORE, property/schema/domain verbs — runs ONE optimistic loop,
+:func:`_commit`: build the actions for the next version, abort a DML
+whose planned files changed, publish put-if-absent (``os.link`` fails
+on an existing version, the protocol's optimistic-concurrency
+primitive) and rebuild against fresh state when another writer won
+the version.
 ``create_checkpoint`` writes the compacted parquet + pointer so logs
 can be vacuumed.
 """
@@ -132,6 +136,19 @@ def _read_last_checkpoint(path: str) -> int | None:
         return int(json.load(open(p))["version"])
     except (ValueError, KeyError, json.JSONDecodeError):
         return None  # corrupt pointer: fall back to full JSON replay
+
+
+def _latest_version(path: str) -> int:
+    """The newest version: max of the commit jsons AND the last
+    checkpoint (the checkpoint can be NEWER than every surviving json
+    when its own commit json expired); -1 when there is no log yet."""
+    if not os.path.isdir(_log_dir(path)):
+        return -1
+    ckpt = _read_last_checkpoint(path)
+    return max(
+        delta_versions(path) + ([ckpt] if ckpt is not None else []),
+        default=-1,
+    )
 
 
 def _resolve_checkpoint(
@@ -615,43 +632,16 @@ def set_domain_metadata(
             f"domain {domain!r} is system-controlled (delta.*) — "
             "only the owning feature's writer may modify it"
         )
-    now_ms = int(time.time() * 1000)
-    while True:
+
+    def build(_next_v: int) -> list[dict]:
         protocol, meta, _adds, _tx = _replay(spark, path, None)
         _writer_gate(protocol, meta, "SET DOMAIN METADATA")
-        feats_w = set(protocol.get("writerFeatures") or [])
-        proto_line: dict | None = None
-        if "domainMetadata" not in feats_w:
-            imp_r, imp_w = _implied_features(protocol)
-            proto_line = {
-                "protocol": {
-                    "minReaderVersion": max(
-                        int(protocol.get("minReaderVersion", 1)), 1
-                    ),
-                    "minWriterVersion": 7,
-                    **(
-                        {"readerFeatures": sorted(imp_r)}
-                        if int(protocol.get("minReaderVersion", 1)) >= 3
-                        else {}
-                    ),
-                    "writerFeatures": sorted(
-                        imp_w | {"domainMetadata"}
-                    ),
-                }
-            }
-        lines = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "SET DOMAIN METADATA",
-                    "operationParameters": {
-                        "domain": domain,
-                        "removed": removed,
-                    },
-                    "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-                }
-            },
-            *([proto_line] if proto_line else []),
+        return [
+            _commit_info(
+                "SET DOMAIN METADATA",
+                {"domain": domain, "removed": removed},
+            ),
+            *_feature_protocol(protocol, {"domainMetadata"}),
             {
                 "domainMetadata": {
                     "domain": domain,
@@ -660,14 +650,8 @@ def set_domain_metadata(
                 }
             },
         ]
-        versions = delta_versions(path)
-        ckpt = _read_last_checkpoint(path)
-        next_v = max(versions + ([ckpt] if ckpt is not None else [])) + 1
-        try:
-            _put_if_absent_commit(path, next_v, lines)
-            return next_v
-        except FileExistsError:
-            continue
+
+    return _commit(spark, path, build)
 
 
 def clustering_columns(spark: SparkSession, path: str) -> list[str]:
@@ -757,8 +741,8 @@ def set_clustering_columns(
     column-mapped tables. Existing files stay as-is (the spec allows
     unclustered data); the next :func:`optimize_delta` reclusters on
     the new columns. Returns the committed version."""
-    now_ms = int(time.time() * 1000)
-    while True:
+
+    def build(_next_v: int) -> list[dict]:
         protocol, meta, _adds, _tx = _replay(spark, path, None)
         _writer_gate(protocol, meta, "CLUSTER BY")
         schema = T.StructType.fromJson(json.loads(meta["schemaString"]))
@@ -766,49 +750,19 @@ def set_clustering_columns(
         cols_l = _validate_cluster_by(cols, schema, pcols)
         physical_of = _column_mapping(meta) or {}
         cols_p = [physical_of.get(c, c) for c in cols_l]
-        feats_w = set(protocol.get("writerFeatures") or [])
-        proto_line: dict | None = None
-        if not ({"clustering", "clusteringW"} & feats_w) or (
-            "domainMetadata" not in feats_w
-        ):
-            imp_r, imp_w = _implied_features(protocol)
-            mrv = max(int(protocol.get("minReaderVersion", 1)), 1)
-            proto_line = {
-                "protocol": {
-                    "minReaderVersion": mrv,
-                    "minWriterVersion": 7,
-                    **(
-                        {"readerFeatures": sorted(imp_r)}
-                        if mrv >= 3
-                        else {}
-                    ),
-                    "writerFeatures": sorted(
-                        imp_w | {"clustering", "domainMetadata"}
-                    ),
-                }
-            }
-        lines = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "CLUSTER BY",
-                    "operationParameters": {
-                        "clusterBy": json.dumps(cols_l)
-                    },
-                    "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-                }
-            },
-            *([proto_line] if proto_line else []),
+        # clusteringW is the older name of the same writer feature
+        feat = (
+            "clusteringW"
+            if "clusteringW" in (protocol.get("writerFeatures") or [])
+            else "clustering"
+        )
+        return [
+            _commit_info("CLUSTER BY", {"clusterBy": json.dumps(cols_l)}),
+            *_feature_protocol(protocol, {feat, "domainMetadata"}),
             _clustering_domain_action(cols_p),
         ]
-        versions = delta_versions(path)
-        ckpt = _read_last_checkpoint(path)
-        next_v = max(versions + ([ckpt] if ckpt is not None else [])) + 1
-        try:
-            _put_if_absent_commit(path, next_v, lines)
-            return next_v
-        except FileExistsError:
-            continue
+
+    return _commit(spark, path, build)
 
 
 def enable_row_tracking(spark: SparkSession, path: str) -> int:
@@ -824,38 +778,17 @@ def enable_row_tracking(spark: SparkSession, path: str) -> int:
     ``delta.rowTracking`` high-water mark. Ids are stable from this
     commit on. Returns the committed version (or the current one
     when tracking is already enabled)."""
-    now_ms = int(time.time() * 1000)
-    while True:
+
+    def build(next_v: int) -> list[dict] | None:
+        now_ms = int(time.time() * 1000)
         protocol, meta, adds, _tx = _replay(spark, path, None)
         _writer_gate(protocol, meta, "ENABLE ROW TRACKING")
-        versions = delta_versions(path)
-        ckpt = _read_last_checkpoint(path)
-        cur_v = max(versions + ([ckpt] if ckpt is not None else []))
         if _rt_supported(protocol) and _rt_enabled(meta):
-            return cur_v
+            return None
         conf2, _id_col, _cv_col = _rt_mint_conf(
             meta.get("configuration") or {}
         )
         conf2["delta.enableRowTracking"] = "true"
-        feats_w = set(protocol.get("writerFeatures") or [])
-        proto_line: dict | None = None
-        if not ({"rowTracking", "domainMetadata"} <= feats_w):
-            imp_r, imp_w = _implied_features(protocol)
-            mrv = max(int(protocol.get("minReaderVersion", 1)), 1)
-            proto_line = {
-                "protocol": {
-                    "minReaderVersion": mrv,
-                    "minWriterVersion": 7,
-                    **(
-                        {"readerFeatures": sorted(imp_r)}
-                        if mrv >= 3
-                        else {}
-                    ),
-                    "writerFeatures": sorted(
-                        imp_w | {"rowTracking", "domainMetadata"}
-                    ),
-                }
-            }
         doms = replay_domains(spark, path)
         hwm = -1
         raw = doms.get("delta.rowTracking")
@@ -865,15 +798,8 @@ def enable_row_tracking(spark: SparkSession, path: str) -> int:
             except (ValueError, TypeError):
                 pass
         lines: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "ENABLE ROW TRACKING",
-                    "operationParameters": {},
-                    "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-                }
-            },
-            *([proto_line] if proto_line else []),
+            _commit_info("ENABLE ROW TRACKING", {}, now_ms),
+            *_feature_protocol(protocol, {"rowTracking", "domainMetadata"}),
             {
                 "metaData": {
                     "id": meta.get("id"),
@@ -910,7 +836,7 @@ def enable_row_tracking(spark: SparkSession, path: str) -> int:
             # backfill only names them — but the original version is
             # unknowable from the add alone, so the spec lets the
             # assigning commit stand in
-            new_add["defaultRowCommitVersion"] = cur_v + 1
+            new_add["defaultRowCommitVersion"] = next_v
             hwm += n
             lines.append({"add": new_add})
         lines.append(
@@ -924,11 +850,9 @@ def enable_row_tracking(spark: SparkSession, path: str) -> int:
                 }
             }
         )
-        try:
-            _put_if_absent_commit(path, cur_v + 1, lines)
-            return cur_v + 1
-        except FileExistsError:
-            continue
+        return lines
+
+    return _commit(spark, path, build)
 
 
 def _reader_gate(protocol: dict, meta: dict, path: str) -> None:
@@ -2259,15 +2183,6 @@ def _check_constraints(
             )
 
 
-def _partition_cast(value: str | None, dtype: T.DataType):
-    """Spec: partitionValues serializes every value as a string (null
-    as JSON null / hive default marker); cast back via Spark so the
-    string→type rules match the connector's."""
-    if value is None or value == _HIVE_NULL:
-        return F.lit(None).cast(dtype)
-    return F.lit(value).cast(dtype)
-
-
 def _commit_timestamp_ms(path: str, v: int) -> int:
     """A commit's timestamp: ``commitInfo.inCommitTimestamp`` when
     the table stamps it (r15 — PROTOCOL.md §In-Commit Timestamps:
@@ -2629,13 +2544,13 @@ def _stamp_row_tracking(
     preserved re-adds (DV retire, RESTORE, shallow clone) keep their
     ids by dict copy and are never passed. Re-entrant under the
     put-if-absent retry: the stamp recomputes from the hwm that
-    actually precedes the commit. No-op unless the protocol (the
-    lines' own protocol action wins — creation/backfill) declares
-    rowTracking."""
+    actually precedes the commit. No-op without fresh adds, or unless
+    the protocol (the lines' own protocol action wins —
+    creation/backfill) declares rowTracking."""
     proto = next(
         (ln["protocol"] for ln in lines if "protocol" in ln), protocol
     )
-    if not _rt_supported(proto or {}):
+    if not fresh_adds or not _rt_supported(proto or {}):
         return
     hwm = -1
     if next_v > 0:
@@ -2663,8 +2578,6 @@ def _stamp_row_tracking(
                 )
             except (ValueError, TypeError):
                 pass
-    if not fresh_adds:
-        return
     for ln in fresh_adds:
         a = ln["add"]
         n = _rt_add_num_records(path, a)
@@ -3359,7 +3272,8 @@ def alter_delta_column_type(
             f"ALTER COLUMN TYPE to nested type {new_type!r} is out "
             "of scope"
         )
-    while True:
+
+    def build(_next_v: int) -> list[dict]:
         protocol, meta, _adds, _tx = _replay(spark, path, None)
         _writer_gate(protocol, meta, "ALTER COLUMN TYPE")
         sj = json.loads(meta["schemaString"])
@@ -3399,48 +3313,22 @@ def alter_delta_column_type(
         field["metadata"] = md
         conf = dict(meta.get("configuration") or {})
         conf["delta.enableTypeWidening"] = "true"
-        feats_r = set(protocol.get("readerFeatures") or [])
-        feats_w = set(protocol.get("writerFeatures") or [])
-        proto_line: dict | None = None
-        if "typeWidening" not in feats_w or "typeWidening" not in feats_r:
-            imp_r, imp_w = _implied_features(protocol)
-            proto_line = {
-                "protocol": {
-                    "minReaderVersion": 3,
-                    "minWriterVersion": 7,
-                    "readerFeatures": sorted(imp_r | {"typeWidening"}),
-                    "writerFeatures": sorted(imp_w | {"typeWidening"}),
-                }
-            }
-        new_meta = dict(
-            meta,
-            schemaString=json.dumps(sj),
-            configuration=conf,
-        )
-        versions = delta_versions(path)
-        ckpt = _read_last_checkpoint(path)
-        next_v = max(versions + ([ckpt] if ckpt is not None else [])) + 1
-        lines = [
+        return [
+            _commit_info(
+                "ALTER COLUMN TYPE",
+                {"column": column, "fromType": old_t, "toType": new_t},
+            ),
+            *_feature_protocol(
+                protocol, {"typeWidening"}, reader={"typeWidening"}
+            ),
             {
-                "commitInfo": {
-                    "timestamp": int(time.time() * 1000),
-                    "operation": "ALTER COLUMN TYPE",
-                    "operationParameters": {
-                        "column": column,
-                        "fromType": old_t,
-                        "toType": new_t,
-                    },
-                    "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-                }
+                "metaData": dict(
+                    meta, schemaString=json.dumps(sj), configuration=conf
+                )
             },
-            *([proto_line] if proto_line else []),
-            {"metaData": new_meta},
         ]
-        try:
-            _put_if_absent_commit(path, next_v, lines)
-            return next_v
-        except FileExistsError:
-            continue
+
+    return _commit(spark, path, build)
 
 
 def set_delta_properties(
@@ -3456,7 +3344,8 @@ def set_delta_properties(
     CONSTRAINT: the existing rows are scanned and the commit refuses
     if any violate (delta-spark behavior — a constraint must hold for
     the whole table, not just future writes)."""
-    while True:
+
+    def build(next_v: int) -> list[dict]:
         _p, meta, _adds, _tx = _replay(spark, path, None)
         _writer_gate(_p, meta, "SET TBLPROPERTIES")
         if (
@@ -3487,9 +3376,6 @@ def set_delta_properties(
                 "schemaString": '{"type":"struct","fields":[]}',
             }
             _check_constraints(cur, fake_meta, "ADD CONSTRAINT")
-        versions = delta_versions(path)
-        ckpt = _read_last_checkpoint(path)
-        next_v = max(versions + ([ckpt] if ckpt is not None else [])) + 1
         now_ms = int(time.time() * 1000)
         new_meta = dict(meta)
         merged = dict(meta.get("configuration") or {})
@@ -3517,7 +3403,8 @@ def set_delta_properties(
             else:
                 merged[str(k)] = str(v)
         new_meta["configuration"] = merged
-        proto_line: dict | None = None
+        feats_r: set[str] = set()
+        feats_w: set[str] = set()
         pol = props.get("delta.checkpointPolicy")
         if pol is not None and str(pol) not in ("classic", "v2"):
             raise ValueError(
@@ -3528,18 +3415,8 @@ def set_delta_properties(
             # (PROTOCOL.md §V2 Checkpoint): the SAME commit that sets
             # the policy upgrades the protocol so legacy readers
             # refuse instead of ignoring the UUID-named checkpoint
-            feats_r = set(_p.get("readerFeatures") or [])
-            feats_w = set(_p.get("writerFeatures") or [])
-            if "v2Checkpoint" not in feats_r or "v2Checkpoint" not in feats_w:
-                imp_r, imp_w = _implied_features(_p)
-                proto_line = {
-                    "protocol": {
-                        "minReaderVersion": 3,
-                        "minWriterVersion": 7,
-                        "readerFeatures": sorted(imp_r | {"v2Checkpoint"}),
-                        "writerFeatures": sorted(imp_w | {"v2Checkpoint"}),
-                    }
-                }
+            feats_r.add("v2Checkpoint")
+            feats_w.add("v2Checkpoint")
         ict_on = (
             str(props.get("delta.enableInCommitTimestamps", "")).lower()
             == "true"
@@ -3563,43 +3440,18 @@ def set_delta_properties(
             merged["delta.inCommitTimestampEnablementTimestamp"] = str(
                 now_ms
             )
-            feats_w = set(_p.get("writerFeatures") or [])
-            if "inCommitTimestamp" not in feats_w and proto_line is None:
-                imp_r, imp_w = _implied_features(_p)
-                mr = int(_p.get("minReaderVersion", 1))
-                proto_line = {
-                    "protocol": {
-                        "minReaderVersion": mr,
-                        "minWriterVersion": 7,
-                        **(
-                            {"readerFeatures": sorted(imp_r)}
-                            if mr >= 3
-                            else {}
-                        ),
-                        "writerFeatures": sorted(
-                            imp_w | {"inCommitTimestamp"}
-                        ),
-                    }
-                }
-        lines = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "SET TBLPROPERTIES",
-                    "operationParameters": {
-                        "properties": json.dumps(props, sort_keys=True)
-                    },
-                    "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-                }
-            },
-            *([proto_line] if proto_line else []),
+            feats_w.add("inCommitTimestamp")
+        return [
+            _commit_info(
+                "SET TBLPROPERTIES",
+                {"properties": json.dumps(props, sort_keys=True)},
+                now_ms,
+            ),
+            *_feature_protocol(_p, feats_w, feats_r),
             {"metaData": new_meta},
         ]
-        try:
-            _put_if_absent_commit(path, next_v, lines)
-            return next_v
-        except FileExistsError:
-            continue
+
+    return _commit(spark, path, build)
 
 
 def add_delta_columns(
@@ -3619,8 +3471,8 @@ def add_delta_columns(
     new = T.StructType.fromDDL(cols) if isinstance(cols, str) else cols
     if not new.fields:
         raise ValueError("ADD COLUMNS needs at least one column")
-    while True:
-        protocol, meta, _adds, _tx = _replay(spark, path, None)
+
+    def build(protocol: dict, meta: dict) -> dict:
         _writer_gate(protocol, meta, "ADD COLUMNS")
         sj = json.loads(meta["schemaString"])
         existing = {f["name"] for f in sj["fields"]}
@@ -3654,32 +3506,16 @@ def add_delta_columns(
             fields.append(fd)
         if mapped:
             conf["delta.columnMapping.maxColumnId"] = str(next_id)
-        new_meta = dict(
+        return dict(
             meta,
             schemaString=json.dumps({"type": "struct", "fields": fields}),
             configuration=conf,
         )
-        versions = delta_versions(path)
-        ckpt = _read_last_checkpoint(path)
-        next_v = max(versions + ([ckpt] if ckpt is not None else [])) + 1
-        lines = [
-            {
-                "commitInfo": {
-                    "timestamp": int(time.time() * 1000),
-                    "operation": "ADD COLUMNS",
-                    "operationParameters": {
-                        "columns": [f.name for f in new.fields]
-                    },
-                    "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-                }
-            },
-            {"metaData": new_meta},
-        ]
-        try:
-            _put_if_absent_commit(path, next_v, lines)
-            return next_v
-        except FileExistsError:
-            continue
+
+    return _meta_only_commit(
+        spark, path, build, "ADD COLUMNS",
+        {"columns": [f.name for f in new.fields]},
+    )
 
 
 def _meta_only_commit(
@@ -3691,28 +3527,15 @@ def _meta_only_commit(
     re-runs against a FRESH replay on every collision retry, so a
     concurrent property/schema commit is never clobbered with a
     stale base."""
-    while True:
+
+    def lines(_next_v: int) -> list[dict]:
         protocol, meta, _adds, _tx = _replay(spark, path, None)
-        new_meta = build(protocol, meta)
-        versions = delta_versions(path)
-        ckpt = _read_last_checkpoint(path)
-        next_v = max(versions + ([ckpt] if ckpt is not None else [])) + 1
-        lines = [
-            {
-                "commitInfo": {
-                    "timestamp": int(time.time() * 1000),
-                    "operation": operation,
-                    "operationParameters": params,
-                    "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-                }
-            },
-            {"metaData": new_meta},
+        return [
+            _commit_info(operation, params),
+            {"metaData": build(protocol, meta)},
         ]
-        try:
-            _put_if_absent_commit(path, next_v, lines)
-            return next_v
-        except FileExistsError:
-            continue
+
+    return _commit(spark, path, lines)
 
 
 def _constraint_references(meta: dict, col: str) -> list[str]:
@@ -3949,6 +3772,108 @@ def _put_if_absent_commit(path: str, version: int, lines: list[dict]) -> None:
     finally:
         os.remove(tmp)
     _write_crc(path, version, lines)
+
+
+def _commit_info(
+    operation: str, params: dict, timestamp: int | None = None
+) -> dict:
+    """The ``commitInfo`` action every commit of this engine leads
+    with (``operationMetrics`` are stamped later, from the finished
+    action list)."""
+    return {
+        "commitInfo": {
+            "timestamp": (
+                int(time.time() * 1000) if timestamp is None else timestamp
+            ),
+            "operation": operation,
+            "operationParameters": params,
+            "engineInfo": "census_asc5_data_pipeline_spark delta_io",
+        }
+    }
+
+
+def _feature_protocol(
+    protocol: dict, writer: set[str], reader: set[str] = frozenset()
+) -> list[dict]:
+    """The same-commit protocol upgrade a feature-enabling verb
+    carries: ``[]`` when ``protocol`` already lists every ``writer`` /
+    ``reader`` table feature, else ONE (n, 7) protocol action listing
+    them on top of everything the current protocol implies (legacy
+    versions expanded, so no guaranteed feature drops out). Reader
+    features force reader version 3."""
+    if writer <= set(protocol.get("writerFeatures") or []) and (
+        reader <= set(protocol.get("readerFeatures") or [])
+    ):
+        return []
+    imp_r, imp_w = _implied_features(protocol)
+    mrv = 3 if reader else max(int(protocol.get("minReaderVersion", 1)), 1)
+    return [
+        {
+            "protocol": {
+                "minReaderVersion": mrv,
+                "minWriterVersion": 7,
+                **(
+                    {"readerFeatures": sorted(imp_r | reader)}
+                    if mrv >= 3
+                    else {}
+                ),
+                "writerFeatures": sorted(imp_w | writer),
+            }
+        }
+    ]
+
+
+def _commit(
+    spark: SparkSession,
+    path: str,
+    build,
+    read_set: dict[str, dict | None] | None = None,
+    fresh_adds: list[dict] = (),
+    protocol: dict | None = None,
+    conf: dict | None = None,
+) -> int:
+    """The ONE optimistic-concurrency loop every Delta commit runs
+    (PROTOCOL.md: version N's JSON is created exactly once):
+
+    1. the next version is one past the newest on disk;
+    2. ``build(next_v)`` returns the commit's actions — re-run on
+       every retry, so builders that read table state read it fresh
+       (None: nothing to commit, the current version is returned);
+    3. ``read_set`` ({path: the deletionVector it was planned
+       against}) must still be live with the same DV, else the DML
+       aborts with nothing committed;
+    4. ``fresh_adds`` (add lines staged new) take row-tracking ids
+       when the protocol — the commit's own protocol action, else
+       ``protocol`` — declares rowTracking;
+    5. put-if-absent publish: a lost race retries from 1, a win runs
+       the ``delta.checkpointInterval`` cadence of ``conf``.
+
+    Returns the committed version."""
+    while True:
+        next_v = _latest_version(path) + 1
+        lines = build(next_v)
+        if lines is None:
+            return next_v - 1
+        if read_set:
+            live_now = _live_subset(spark, path, frozenset(read_set))
+            for p_, dv in read_set.items():
+                cur = live_now.get(p_)
+                if cur is None or cur.get("deletionVector") != dv:
+                    op = lines[0]["commitInfo"]["operation"]
+                    raise ValueError(
+                        f"concurrent commit changed {p_!r} since this "
+                        f"{op} was planned — aborting without "
+                        "committing (re-run against the new state)"
+                    )
+        _stamp_row_tracking(
+            spark, path, protocol or {}, lines, fresh_adds, next_v
+        )
+        try:
+            _put_if_absent_commit(path, next_v, lines)
+        except FileExistsError:
+            continue
+        _maybe_auto_checkpoint(spark, path, next_v, conf)
+        return next_v
 
 
 def _crc_file(path: str, version: int) -> str:
@@ -4384,6 +4309,7 @@ def write_delta(
     exists = os.path.isdir(_log_dir(path)) and (
         delta_versions(path) or _read_last_checkpoint(path) is not None
     )
+    prev_protocol: dict | None = None
     prev_meta: dict = {}
     identity_updates: dict[str, int] = {}
     identity_basis: dict[str, int | None] = {}
@@ -4693,17 +4619,18 @@ def write_delta(
         return None
     now_ms = int(time.time() * 1000)
 
-    while True:
-        versions = delta_versions(path) if os.path.isdir(
-            _log_dir(path)
-        ) else []
-        ckpt = _read_last_checkpoint(path)
-        if versions or ckpt is not None:
-            next_v = max(versions + ([ckpt] if ckpt is not None else [])) + 1
+    def build(next_v: int) -> list[dict]:
+        if next_v > 0:
             _p, meta, adds, _txs = _replay(spark, path, None)
         else:
-            next_v = 0
             _p, meta, adds = None, {}, {}
+        if _rt_supported(_p or {}) != _rt_supported(prev_protocol or {}):
+            # fresh adds take row ids under the protocol this write
+            # was planned against
+            raise ValueError(
+                "table row tracking changed concurrently — re-run the "
+                "write"
+            )
         schema_changed = False
         if meta and (_column_mapping(meta) or None) != (
             expected_mapping or None
@@ -4746,20 +4673,14 @@ def write_delta(
                     )
                 schema_changed = True
         lines: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    # COPY INTO rides this writer with its own
-                    # operation tag + loaded-file list (r13): the
-                    # commitInfo record IS its idempotency ledger
-                    "operation": commit_operation,
-                    "operationParameters": {
-                        "mode": mode.upper(),
-                        **(commit_params or {}),
-                    },
-                    "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-                }
-            }
+            # COPY INTO rides this writer with its own operation tag +
+            # loaded-file list (r13): the commitInfo record IS its
+            # idempotency ledger
+            _commit_info(
+                commit_operation,
+                {"mode": mode.upper(), **(commit_params or {})},
+                now_ms,
+            )
         ]
         if txn is not None:
             lines.append(
@@ -4888,15 +4809,6 @@ def write_delta(
             for p in sorted(adds):
                 lines.append({"remove": _remove_action(adds[p], now_ms)})
         lines.extend(add_actions)
-        _stamp_row_tracking(
-            spark,
-            path,
-            (_p if (versions or ckpt is not None) else create_protocol)
-            or {},
-            lines,
-            add_actions,
-            next_v,
-        )
         c = _commit_counts(lines)
         _stamp_op_metrics(
             lines,
@@ -4912,15 +4824,16 @@ def write_delta(
                 else {}
             ),
         )
-        try:
-            _put_if_absent_commit(path, next_v, lines)
-            _maybe_auto_checkpoint(
-                spark, path, next_v,
-                meta.get("configuration") or create_conf,
-            )
-            return next_v
-        except FileExistsError:
-            continue  # another writer claimed next_v: re-replay, retry
+        return lines
+
+    return _commit(
+        spark,
+        path,
+        build,
+        fresh_adds=add_actions,
+        protocol=prev_protocol,
+        conf=prev_meta.get("configuration") or create_conf,
+    )
 
 
 def _dv_retire(
@@ -5130,17 +5043,9 @@ def delete_delta_where(
     adds_by_base = _adds_by_base(adds)
     now_ms = int(time.time() * 1000)
     lines: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "DELETE",
-                "operationParameters": {
-                    "predicate": predicate,
-                    "mode": mode,
-                },
-                "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-            }
-        }
+        _commit_info(
+            "DELETE", {"predicate": predicate, "mode": mode}, now_ms
+        )
     ]
     if rt_meta_line:
         lines.append(rt_meta_line)
@@ -5226,30 +5131,15 @@ def delete_delta_where(
         numDeletionVectorsAdded=c["dv_adds"] if mode == "dv" else None,
         numAddedChangeFiles=c["cdc"],
     )
-    while True:
-        versions = delta_versions(path)
-        ckpt = _read_last_checkpoint(path)
-        next_v = max(versions + ([ckpt] if ckpt is not None else [])) + 1
-        live_now = _live_subset(spark, path, frozenset(planned))
-        for p_, dv in planned.items():
-            cur = live_now.get(p_)
-            if cur is None or cur.get("deletionVector") != dv:
-                raise ValueError(
-                    f"concurrent commit changed {p_!r} since this "
-                    "DELETE was planned — aborting without committing "
-                    "(re-run against the new state)"
-                )
-        _stamp_row_tracking(
-            spark, path, protocol, lines, new_adds, next_v
-        )
-        try:
-            _put_if_absent_commit(path, next_v, lines)
-            _maybe_auto_checkpoint(
-                spark, path, next_v, meta.get("configuration")
-            )
-            return next_v
-        except FileExistsError:
-            continue
+    return _commit(
+        spark,
+        path,
+        lambda _v: lines,
+        read_set=planned,
+        fresh_adds=new_adds,
+        protocol=protocol,
+        conf=meta.get("configuration"),
+    )
 
 
 def commit_operation_metrics(path: str, version: int) -> dict:
@@ -6303,9 +6193,7 @@ def optimize_delta(
         }
     now_ms = int(time.time() * 1000)
     new_adds: list[dict] = []
-    removed_paths: list[str] = []
     removed_adds: dict[str, dict] = {}
-    planned_dv: dict[str, dict | None] = {}
     for key, (files, want_files) in sorted(todo.items()):
         paths = [_data_file_path(path, a["path"]) for a in files]
         src = spark.read.schema(read_schema).parquet(*paths)
@@ -6460,80 +6348,55 @@ def optimize_delta(
                 )
         finally:
             shutil.rmtree(staging, ignore_errors=True)
-        removed_paths.extend(a["path"] for a in files)
         removed_adds.update({a["path"]: a for a in files})
-        planned_dv.update(
-            {a["path"]: a.get("deletionVector") for a in files}
-        )
 
-    while True:
-        versions = delta_versions(path)
-        ckpt = _read_last_checkpoint(path)
-        next_v = max(versions + ([ckpt] if ckpt is not None else [])) + 1
-        live_now = _live_subset(spark, path, frozenset(removed_paths))
-        gone = [
-            p_
-            for p_ in removed_paths
-            if p_ not in live_now
-            or live_now[p_].get("deletionVector") != planned_dv.get(p_)
-        ]
-        if gone:
-            raise ValueError(
-                f"concurrent commit changed {len(gone)} file(s) this "
-                "OPTIMIZE would rewrite — aborting without committing "
-                "(re-run to compact the new state)"
-            )
-        lines: list[dict] = [
+    lines: list[dict] = [
+        _commit_info(
+            "OPTIMIZE",
             {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "OPTIMIZE",
-                    "operationParameters": {
-                        "targetFileBytes": int(target_file_bytes),
-                        **(
-                            (
-                                {"clusterBy": json.dumps(list(zorder_by))}
-                                if cluster_mode
-                                else {"zOrderBy": json.dumps(list(zorder_by))}
-                            )
-                            if zorder_by
-                            else {}
-                        ),
-                    },
-                    "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-                }
-            }
-        ]
-        if rt_meta_line:
-            lines.append(rt_meta_line)
-        for p_ in removed_paths:
-            lines.append(
-                {
-                    "remove": _remove_action(
-                        removed_adds[p_], now_ms, data_change=False
+                "targetFileBytes": int(target_file_bytes),
+                **(
+                    (
+                        {"clusterBy": json.dumps(list(zorder_by))}
+                        if cluster_mode
+                        else {"zOrderBy": json.dumps(list(zorder_by))}
                     )
-                }
-            )
-        lines.extend(new_adds)
-        _stamp_row_tracking(spark, path, _p, lines, new_adds, next_v)
-        c = _commit_counts(lines)
-        _stamp_op_metrics(
-            lines,
-            numAddedFiles=c["adds"],
-            numRemovedFiles=c["removes"],
-            numAddedBytes=c["add_bytes"],
-            numRemovedBytes=c["remove_bytes"],
-        )
-        try:
-            _put_if_absent_commit(path, next_v, lines)
-            break
-        except FileExistsError:
-            continue
+                    if zorder_by
+                    else {}
+                ),
+            },
+            now_ms,
+        ),
+        *([rt_meta_line] if rt_meta_line else []),
+        *(
+            {"remove": _remove_action(a, now_ms, data_change=False)}
+            for a in removed_adds.values()
+        ),
+        *new_adds,
+    ]
+    c = _commit_counts(lines)
+    _stamp_op_metrics(
+        lines,
+        numAddedFiles=c["adds"],
+        numRemovedFiles=c["removes"],
+        numAddedBytes=c["add_bytes"],
+        numRemovedBytes=c["remove_bytes"],
+    )
+    version = _commit(
+        spark,
+        path,
+        lambda _v: lines,
+        read_set={
+            p_: a.get("deletionVector") for p_, a in removed_adds.items()
+        },
+        fresh_adds=new_adds,
+        protocol=_p,
+    )
     return {
         "partitions_compacted": len(todo),
         "files_before": files_total,
-        "files_after": files_total - len(removed_paths) + len(new_adds),
-        "version": next_v,
+        "files_after": files_total - len(removed_adds) + len(new_adds),
+        "version": version,
     }
 
 
@@ -6761,22 +6624,19 @@ def clone_delta(
                     shutil.copy2(os.path.join(src, dv_rel), dv_dst)
         out_adds.append({"add": a})
     lines: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "CLONE",
-                "operationParameters": {
-                    "source": os.path.abspath(src),
-                    "shallow": bool(shallow),
-                    **(
-                        {"sourceVersion": int(version)}
-                        if version is not None
-                        else {}
-                    ),
-                },
-                "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-            }
-        },
+        _commit_info(
+            "CLONE",
+            {
+                "source": os.path.abspath(src),
+                "shallow": bool(shallow),
+                **(
+                    {"sourceVersion": int(version)}
+                    if version is not None
+                    else {}
+                ),
+            },
+            now_ms,
+        ),
         {"protocol": dict(protocol)},
         {
             "metaData": {
@@ -6818,22 +6678,11 @@ def restore_delta(
     the new version."""
     _p, _m, target_adds, _tx = _replay(spark, path, version)
     now_ms = int(time.time() * 1000)
-    while True:
+
+    def build(_next_v: int) -> list[dict]:
         _p2, meta, cur_adds, _tx2 = _replay(spark, path, None)
         _writer_gate(_p2, meta, "RESTORE")
-        versions = delta_versions(path)
-        ckpt = _read_last_checkpoint(path)
-        next_v = max(versions + ([ckpt] if ckpt is not None else [])) + 1
-        lines: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "RESTORE",
-                    "operationParameters": {"version": int(version)},
-                    "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-                }
-            }
-        ]
+        lines = [_commit_info("RESTORE", {"version": int(version)}, now_ms)]
         for p_ in cur_adds:
             if p_ not in target_adds:
                 lines.append(
@@ -6864,11 +6713,9 @@ def restore_delta(
                 int(a.get("size", 0) or 0) for a in target_adds.values()
             ),
         )
-        try:
-            _put_if_absent_commit(path, next_v, lines)
-            return next_v
-        except FileExistsError:
-            continue
+        return lines
+
+    return _commit(spark, path, build)
 
 
 def register_delta_views(

@@ -589,14 +589,7 @@ def _merge_delta(
             )
         now_ms = int(time.time() * 1000)
         lines: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    "operation": "MERGE",
-                    "operationParameters": {"predicate": on},
-                    "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-                }
-            }
+            d._commit_info("MERGE", {"predicate": on}, now_ms)
         ]
         if extra_fields or identity_updates or rt_conf_changed:
             # schema evolution, the advanced identity high water mark
@@ -793,31 +786,16 @@ def _merge_delta(
             numTargetDeletionVectorsAdded=dv_pairs if mode == "dv" else None,
             numTargetChangeFilesAdded=c["cdc"],
         )
-        while True:
-            versions = d.delta_versions(path)
-            ckpt = d._read_last_checkpoint(path)
-            next_v = max(versions + ([ckpt] if ckpt is not None else [])) + 1
-            if identity_updates:
-                # the hwm comparison needs the CURRENT metaData — full
-                # replay here; the non-identity path fetches only the
-                # planned adds
-                _p2, _m2, live_now, _t2 = d._replay(spark, path, None)
-            else:
-                live_now = d._live_subset(spark, path, frozenset(planned))
-            for p_, dv in planned.items():
-                cur = live_now.get(p_)
-                if cur is None or cur.get("deletionVector") != dv:
-                    raise ValueError(
-                        f"concurrent commit changed {p_!r} since this MERGE "
-                        "was planned — aborting without committing"
-                    )
+
+        def build(_next_v: int) -> list[dict]:
             if identity_updates:
                 # the write_delta concurrent-allocation abort, verbatim:
                 # committing a range another writer also allocated would
                 # duplicate keys
+                _p2, m2, _a2, _t2 = d._replay(spark, path, None)
                 cur_basis = {
                     n: h
-                    for n, _d, _s, _st, h, _a in d._identity_columns(_m2)
+                    for n, _d, _s, _st, h, _a in d._identity_columns(m2)
                 }
                 if cur_basis != identity_basis:
                     raise ValueError(
@@ -825,17 +803,17 @@ def _merge_delta(
                         "water mark moved since this MERGE was planned) "
                         "— re-run the merge"
                     )
-            d._stamp_row_tracking(
-                spark, path, protocol, lines, staged_add_lines, next_v
-            )
-            try:
-                d._put_if_absent_commit(path, next_v, lines)
-                d._maybe_auto_checkpoint(
-                    spark, path, next_v, meta.get("configuration")
-                )
-                return next_v
-            except FileExistsError:
-                continue
+            return lines
+
+        return d._commit(
+            spark,
+            path,
+            build,
+            read_set=planned,
+            fresh_adds=staged_add_lines,
+            protocol=protocol,
+            conf=meta.get("configuration"),
+        )
 
     ins_cache = None
     if inserts is not None:
@@ -926,7 +904,7 @@ def _merge_iceberg(
         # post-images carry the default, never a wrong NULL
         defaults_ok=True,
     )
-    branch_head = _branch_head(meta, branch)
+    branch_head = ice._branch_head(meta, branch)
     schema, fields = ice._schema_of(meta)
     defaulted = (
         [f for f in fields if f.get("initial-default") is not None]
@@ -1125,27 +1103,6 @@ def _merge_iceberg_commit(
     )
 
 
-def _branch_head(meta: dict, branch: str | None) -> int | None:
-    """Resolve a branch ref to its head snapshot id for DML scans
-    (None = main/current). Validation mirrors
-    :func:`_commit_iceberg_mor`'s, but the scan needs the head BEFORE
-    planning."""
-    if branch is None:
-        return None
-    bref = (meta.get("refs") or {}).get(branch)
-    if bref is None:
-        raise ValueError(
-            f"unknown branch {branch!r} — create_branch first "
-            f"(refs: {sorted(meta.get('refs') or {})})"
-        )
-    if bref.get("type") != "branch":
-        raise ValueError(
-            f"ref {branch!r} is a {bref.get('type')!r}, not a branch "
-            "— only branches accept writes"
-        )
-    return int(bref["snapshot-id"])
-
-
 def _commit_iceberg_mor(
     spark, path, cur_v, meta, pos_df, new_rows, pcols=None,
     evolved_fields=None, branch=None, existing_deletes=None,
@@ -1170,25 +1127,12 @@ def _commit_iceberg_mor(
     import pyarrow.parquet as pq
 
     pcols = pcols or []
-    branch_base: int | None = None
-    if branch is not None:
-        if evolved_fields is not None:
-            raise NotImplementedError(
-                "schema evolution on a BRANCH write is out of scope — "
-                "current-schema-id is table-global"
-            )
-        bref = (meta.get("refs") or {}).get(branch)
-        if bref is None:
-            raise ValueError(
-                f"unknown branch {branch!r} — create_branch first "
-                f"(refs: {sorted(meta.get('refs') or {})})"
-            )
-        if bref.get("type") != "branch":
-            raise ValueError(
-                f"ref {branch!r} is a {bref.get('type')!r}, not a "
-                "branch — only branches accept writes"
-            )
-        branch_base = int(bref["snapshot-id"])
+    if branch is not None and evolved_fields is not None:
+        raise NotImplementedError(
+            "schema evolution on a BRANCH write is out of scope — "
+            "current-schema-id is table-global"
+        )
+    branch_base = ice._branch_head(meta, branch)
     fv = int(meta.get("format-version", 2))
     delete_files: list[dict] = []
     dv_entry_schema: dict | None = None
@@ -1341,211 +1285,175 @@ def _commit_iceberg_mor(
         shutil.rmtree(staging, ignore_errors=True)
     if not delete_files and not added_files:
         return None
-    if ice._current_metadata(path)[0] != cur_v:
-        raise ValueError(
-            "concurrent commit landed during MERGE planning — aborting "
-            "without committing"
+
+    def build(_cur_v: int, _meta: dict) -> dict:
+        now_ms = int(time.time() * 1000)
+        snap_id = cur_v + 1
+        seq = int(meta.get("last-sequence-number", cur_v)) + 1
+        specs = meta.get("partition-specs") or (
+            [{"spec-id": 0, "fields": meta.get("partition-spec", [])}]
         )
-    now_ms = int(time.time() * 1000)
-    new_v = cur_v + 1
-    snap_id = new_v
-    seq = int(meta.get("last-sequence-number", cur_v)) + 1
-    specs = meta.get("partition-specs") or (
-        [{"spec-id": 0, "fields": meta.get("partition-spec", [])}]
-    )
-    default_spec_id = meta.get("default-spec-id", 0)
-    # a position-delete file spanning partitions is GLOBAL per spec —
-    # it belongs to an unpartitioned spec; register one if the table
-    # only has partitioned specs
-    new_specs = list(specs)
-    delete_spec_id = default_spec_id
-    if delete_files and pcols:
-        unpart = next(
-            (s for s in specs if not s.get("fields")), None
-        )
-        if unpart is None:
-            unpart = {
-                "spec-id": max(s.get("spec-id", 0) for s in specs) + 1,
-                "fields": [],
-            }
-            new_specs = specs + [unpart]
-        delete_spec_id = unpart["spec-id"]
-    lineage_first: int | None = None
-    lineage_next: int | None = None
-    if fv >= 3 and added_files:
+        default_spec_id = meta.get("default-spec-id", 0)
+        # a position-delete file spanning partitions is GLOBAL per spec —
+        # it belongs to an unpartitioned spec; register one if the table
+        # only has partitioned specs
+        new_specs = list(specs)
+        delete_spec_id = default_spec_id
+        if delete_files and pcols:
+            unpart = next(
+                (s for s in specs if not s.get("fields")), None
+            )
+            if unpart is None:
+                unpart = {
+                    "spec-id": max(s.get("spec-id", 0) for s in specs) + 1,
+                    "fields": [],
+                }
+                new_specs = specs + [unpart]
+            delete_spec_id = unpart["spec-id"]
         # fresh first_row_id blocks above next-row-id (spec: assigned
         # to every added data file; rows with a materialized _row_id
         # — the updated images — simply never consult theirs)
-        lineage_first = int(meta.get("next-row-id", 0) or 0)
-        lineage_next = lineage_first
-        for dd in added_files:
-            dd["first_row_id"] = lineage_next
-            lineage_next += int(dd["record_count"])
-    data_entry_schema = ice._entry_schema_for(
-        [(pf["name"], pf["result_type"]) for pf in pcols]
-    )
-    if fv >= 3:
-        data_entry_schema["fields"][2]["type"]["fields"].append(
-            {"name": "first_row_id", "type": ["null", "long"],
-             "default": None}
+        lineage_first, lineage_next = (
+            ice._assign_row_ids(meta, added_files)
+            if fv >= 3 and added_files
+            else (None, None)
         )
-    schemas_by_content = {
-        0: data_entry_schema,
-        1: dv_entry_schema or ice._entry_schema_for([]),
-    }
-    spec_by_content = {0: default_spec_id, 1: delete_spec_id}
-    manifests: list[dict] = []
-    for content, files_ in ((0, added_files), (1, delete_files)):
-        if not files_:
-            continue
-        man_path = os.path.join(
-            ice._meta_dir(path),
-            f"manifest-merge{content}-{snap_id}-{uuid.uuid4().hex}.avro",
-        )
-        with open(man_path, "wb") as fh:
-            write_container_generic(
-                fh,
-                schemas_by_content[content],
-                [
-                    {"status": 1, "snapshot_id": snap_id, "data_file": dd}
-                    for dd in files_
-                ],
-            )
-        manifests.append(
-            {
-                "manifest_path": os.path.abspath(man_path),
-                "manifest_length": os.path.getsize(man_path),
-                "partition_spec_id": spec_by_content[content],
-                "content": content,
-                "sequence_number": seq,
-                "min_sequence_number": seq,
-                "added_snapshot_id": snap_id,
-                "added_files_count": len(files_),
-                "existing_files_count": 0,
-                "deleted_files_count": 0,
-                "added_rows_count": sum(
-                    dd["record_count"] for dd in files_
-                ),
-                "existing_rows_count": 0,
-                "deleted_rows_count": 0,
-            }
-        )
-    cur_snap_id = (
-        branch_base if branch is not None
-        else meta.get("current-snapshot-id")
-    )
-    prev_manifests: list[dict] = []
-    snap = next(
-        (
-            s
-            for s in meta.get("snapshots", [])
-            if s["snapshot-id"] == cur_snap_id
-        ),
-        None,
-    )
-    if snap is not None and "manifest-list" in snap:
-        _s, prev_manifests = ice.read_container_generic(
-            ice._local(snap["manifest-list"])
-        )
-    # v3: a replacement DV supersedes the old entry in the SAME
-    # snapshot — drop it from the re-listed prior manifests
-    prev_manifests = ice._drop_superseded_dv_entries(
-        path, prev_manifests, dv_superseded
-    )
-    ml_path = os.path.join(
-        ice._meta_dir(path), f"snap-{snap_id}-{uuid.uuid4().hex}.avro"
-    )
-    ml_rows = [
-        {
-            k: m.get(k, 0)
-            for k in (
-                f["name"]
-                for f in ice._MANIFEST_FILE_SCHEMA["fields"]
-            )
+        schemas_by_content = {
+            0: ice._entry_schema_for(
+                [(pf["name"], pf["result_type"]) for pf in pcols],
+                row_ids=fv >= 3,
+            ),
+            1: dv_entry_schema or ice._entry_schema_for([]),
         }
-        for m in prev_manifests
-    ] + manifests
-    with open(ml_path, "wb") as fh:
-        write_container_generic(
-            fh, ice._MANIFEST_FILE_SCHEMA, ml_rows
+        spec_by_content = {0: default_spec_id, 1: delete_spec_id}
+        manifests: list[dict] = []
+        for content, files_ in ((0, added_files), (1, delete_files)):
+            if not files_:
+                continue
+            man_path = os.path.join(
+                ice._meta_dir(path),
+                f"manifest-merge{content}-{snap_id}-{uuid.uuid4().hex}.avro",
+            )
+            with open(man_path, "wb") as fh:
+                write_container_generic(
+                    fh,
+                    schemas_by_content[content],
+                    [
+                        {"status": 1, "snapshot_id": snap_id, "data_file": dd}
+                        for dd in files_
+                    ],
+                )
+            manifests.append(
+                {
+                    "manifest_path": os.path.abspath(man_path),
+                    "manifest_length": os.path.getsize(man_path),
+                    "partition_spec_id": spec_by_content[content],
+                    "content": content,
+                    "sequence_number": seq,
+                    "min_sequence_number": seq,
+                    "added_snapshot_id": snap_id,
+                    "added_files_count": len(files_),
+                    "existing_files_count": 0,
+                    "deleted_files_count": 0,
+                    "added_rows_count": sum(
+                        dd["record_count"] for dd in files_
+                    ),
+                    "existing_rows_count": 0,
+                    "deleted_rows_count": 0,
+                }
+            )
+        cur_snap_id = (
+            branch_base if branch is not None
+            else meta.get("current-snapshot-id")
         )
-    new_sid = meta.get("current-schema-id", 0)
-    evolved_schemas = None
-    if evolved_fields is not None:
-        prev_schemas = meta.get("schemas") or (
-            [dict(meta["schema"], **{"schema-id": 0})]
-            if "schema" in meta
-            else []
+        # v3: a replacement DV supersedes the old entry in the SAME
+        # snapshot — drop it from the re-listed prior manifests
+        prev_manifests = ice._drop_superseded_dv_entries(
+            path, ice._manifest_list(meta, cur_snap_id), dv_superseded
         )
-        new_sid = (
-            max((sc.get("schema-id", 0) for sc in prev_schemas), default=0)
-            + 1
+        ml_path = os.path.join(
+            ice._meta_dir(path), f"snap-{snap_id}-{uuid.uuid4().hex}.avro"
         )
-        evolved_schemas = prev_schemas + [
+        ml_rows = [
             {
-                "type": "struct",
-                "schema-id": new_sid,
-                "fields": evolved_fields,
+                k: m.get(k, 0)
+                for k in (
+                    f["name"]
+                    for f in ice._MANIFEST_FILE_SCHEMA["fields"]
+                )
             }
-        ]
-    snapshot = {
-        "snapshot-id": snap_id,
-        "sequence-number": seq,
-        "timestamp-ms": now_ms,
-        "manifest-list": os.path.abspath(ml_path),
-        "summary": ice._snapshot_summary(
-            "overwrite",
-            ml_rows,
-            ice._parent_summary(meta, cur_snap_id),
-            added_data_files=len(added_files),
-            added_records=sum(
-                int(dd["record_count"]) for dd in added_files
+            for m in prev_manifests
+        ] + manifests
+        with open(ml_path, "wb") as fh:
+            write_container_generic(
+                fh, ice._MANIFEST_FILE_SCHEMA, ml_rows
+            )
+        new_sid = meta.get("current-schema-id", 0)
+        evolved_schemas = None
+        if evolved_fields is not None:
+            prev_schemas = meta.get("schemas") or (
+                [dict(meta["schema"], **{"schema-id": 0})]
+                if "schema" in meta
+                else []
+            )
+            new_sid = (
+                max((sc.get("schema-id", 0) for sc in prev_schemas), default=0)
+                + 1
+            )
+            evolved_schemas = prev_schemas + [
+                {
+                    "type": "struct",
+                    "schema-id": new_sid,
+                    "fields": evolved_fields,
+                }
+            ]
+        snapshot = {
+            "snapshot-id": snap_id,
+            "sequence-number": seq,
+            "timestamp-ms": now_ms,
+            "manifest-list": os.path.abspath(ml_path),
+            "summary": ice._snapshot_summary(
+                "overwrite",
+                ml_rows,
+                ice._parent_summary(meta, cur_snap_id),
+                added_data_files=len(added_files),
+                added_records=sum(
+                    int(dd["record_count"]) for dd in added_files
+                ),
+                added_delete_files=len(delete_files),
+                added_position_deletes=sum(
+                    int(dd["record_count"]) for dd in delete_files
+                ),
+                added_files_size=sum(
+                    int(dd.get("file_size_in_bytes", 0) or 0)
+                    for dd in added_files + delete_files
+                ),
             ),
-            added_delete_files=len(delete_files),
-            added_position_deletes=sum(
-                int(dd["record_count"]) for dd in delete_files
-            ),
-            added_files_size=sum(
-                int(dd.get("file_size_in_bytes", 0) or 0)
-                for dd in added_files + delete_files
-            ),
-        ),
-        "schema-id": new_sid,
-    }
-    if lineage_first is not None:
-        snapshot["first-row-id"] = int(lineage_first)
-    if cur_snap_id is not None and cur_snap_id != -1:
-        snapshot["parent-snapshot-id"] = int(cur_snap_id)
-    new_meta = dict(meta)
-    if lineage_next is not None:
-        new_meta["next-row-id"] = int(lineage_next)
-    if evolved_schemas is not None:
-        # the schema widens ATOMICALLY with the row changes (the
-        # Delta evolve_schema twin): new schema-id, name-stable old
-        # field ids, fresh ids for additions
-        new_meta["schemas"] = evolved_schemas
-        new_meta["current-schema-id"] = new_sid
-        new_meta["last-column-id"] = max(
-            f["id"] for f in evolved_fields
-        )
-        new_meta.pop("schema", None)
-    new_meta["last-sequence-number"] = seq
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["snapshots"] = meta.get("snapshots", []) + [snapshot]
-    if branch is not None:
+            "schema-id": new_sid,
+        }
+        if lineage_first is not None:
+            snapshot["first-row-id"] = int(lineage_first)
+        if cur_snap_id is not None and cur_snap_id != -1:
+            snapshot["parent-snapshot-id"] = int(cur_snap_id)
         # branch DML advances the ref only; main lineage stays put
-        new_refs = dict(meta.get("refs") or {})
-        new_refs[branch] = {**new_refs[branch], "snapshot-id": snap_id}
-        new_meta["refs"] = new_refs
-    else:
-        new_meta["current-snapshot-id"] = snap_id
-        new_meta["snapshot-log"] = meta.get("snapshot-log", []) + [
-            {"timestamp-ms": now_ms, "snapshot-id": snap_id}
-        ]
-    if new_specs != specs:
-        new_meta["partition-specs"] = new_specs
-    ice._write_metadata_version(path, new_v, new_meta)
-    return snap_id
+        new_meta = ice._add_snapshot(meta, snapshot, branch)
+        if lineage_next is not None:
+            new_meta["next-row-id"] = int(lineage_next)
+        if evolved_schemas is not None:
+            # the schema widens ATOMICALLY with the row changes (the
+            # Delta evolve_schema twin): new schema-id, name-stable old
+            # field ids, fresh ids for additions
+            new_meta["schemas"] = evolved_schemas
+            new_meta["current-schema-id"] = new_sid
+            new_meta["last-column-id"] = max(
+                f["id"] for f in evolved_fields
+            )
+            new_meta.pop("schema", None)
+        if new_specs != specs:
+            new_meta["partition-specs"] = new_specs
+        return new_meta
+
+    return ice._commit_metadata(path, build, base_v=cur_v)
 
 
 # --------------------------------------------------------- SQL layer
@@ -2038,14 +1946,7 @@ def _update_delta(spark, path, predicate, sets, mode) -> int | None:
     adds_by_base = d._adds_by_base(adds)
     now_ms = int(time.time() * 1000)
     lines: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": now_ms,
-                "operation": "UPDATE",
-                "operationParameters": {"predicate": predicate},
-                "engineInfo": "census_asc5_data_pipeline_spark delta_io",
-            }
-        }
+        d._commit_info("UPDATE", {"predicate": predicate}, now_ms)
     ]
     if rt_meta_line:
         lines.append(rt_meta_line)
@@ -2158,29 +2059,15 @@ def _update_delta(spark, path, predicate, sets, mode) -> int | None:
             numDeletionVectorsAdded=dv_pairs if mode == "dv" else None,
             numAddedChangeFiles=c["cdc"],
         )
-        while True:
-            versions = d.delta_versions(path)
-            ckpt = d._read_last_checkpoint(path)
-            next_v = max(versions + ([ckpt] if ckpt is not None else [])) + 1
-            live_now = d._live_subset(spark, path, frozenset(planned))
-            for p_, dv in planned.items():
-                cur = live_now.get(p_)
-                if cur is None or cur.get("deletionVector") != dv:
-                    raise ValueError(
-                        f"concurrent commit changed {p_!r} since this "
-                        "UPDATE was planned — aborting without committing"
-                    )
-            d._stamp_row_tracking(
-                spark, path, protocol, lines, staged_add_lines, next_v
-            )
-            try:
-                d._put_if_absent_commit(path, next_v, lines)
-                d._maybe_auto_checkpoint(
-                    spark, path, next_v, meta.get("configuration")
-                )
-                return next_v
-            except FileExistsError:
-                continue
+        return d._commit(
+            spark,
+            path,
+            lambda _v: lines,
+            read_set=planned,
+            fresh_adds=staged_add_lines,
+            protocol=protocol,
+            conf=meta.get("configuration"),
+        )
 
     finally:
         matched.unpersist()
@@ -2195,7 +2082,7 @@ def _update_iceberg(spark, path, predicate, sets, branch=None) -> int | None:
     fv = ice._format_version_gate(
         meta, "UPDATE", write=True, v3_write_ok=True, defaults_ok=True,
     )
-    branch_head = _branch_head(meta, branch)
+    branch_head = ice._branch_head(meta, branch)
     schema, fields = ice._schema_of(meta)
     defaulted = (
         [f for f in fields if f.get("initial-default") is not None]

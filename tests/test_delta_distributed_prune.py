@@ -302,15 +302,40 @@ def test_dml_candidates_via_spark_plane_match_driver(
     assert got == want
 
 
-def test_dml_concurrency_abort_still_fires(spark, tmp_path, force_spark_path):
+@pytest.mark.parametrize("verb", ["DELETE", "UPDATE", "MERGE", "OPTIMIZE"])
+def test_dml_concurrency_abort_still_fires(
+    spark, tmp_path, force_spark_path, verb
+):
     """The commit-time re-check now fetches only the planned adds —
-    a concurrent change to one of them must still abort."""
+    a concurrent change to one of them must still abort every DML
+    verb, leaving the racer's commit as the table head."""
+    from census_asc5_data_pipeline_spark.sources.merge import (
+        merge_into,
+        update_where,
+    )
+
     path = str(tmp_path / "race")
     df = spark.createDataFrame(
         [(i, float(i)) for i in range(100)], "k long, v double"
     )
     d.write_delta(df.coalesce(2), path)
     d.create_checkpoint(spark, path)
+    src = spark.createDataFrame([(1, -1.0), (2, -2.0)], "k long, v double")
+    dml = {
+        "DELETE": lambda: d.delete_delta_where(
+            spark, path, "k <= 10", mode="cow"
+        ),
+        "UPDATE": lambda: update_where(
+            spark, "delta", path, "k <= 10", {"v": "v + 1"}
+        ),
+        "MERGE": lambda: merge_into(
+            spark, "delta", path, src, "t.k = s.k",
+            matched=[("update", None, {"v": "s.v"})],
+        ),
+        "OPTIMIZE": lambda: d.optimize_delta(
+            spark, path, target_file_bytes=1 << 30
+        ),
+    }[verb]
 
     # simulate a concurrent writer landing between planning and
     # commit: monkey-wrap _put_if_absent_commit to sneak a commit in
@@ -326,9 +351,13 @@ def test_dml_concurrency_abort_still_fires(spark, tmp_path, force_spark_path):
     d._put_if_absent_commit = racing_put
     try:
         with pytest.raises(ValueError, match="concurrent"):
-            d.delete_delta_where(spark, path, "k <= 10", mode="cow")
+            dml()
     finally:
         d._put_if_absent_commit = real_put
+    assert state["raced"]
+    got = sorted(map(tuple, d.read_delta(spark, path).collect()))
+    assert got == [(i, float(i)) for i in range(100) if i != 1]
+    assert d.describe_history(spark, path).first()["operation"] == "DELETE"
 
 
 def test_optimize_and_vacuum_via_plane_match_driver(spark, tmp_path):

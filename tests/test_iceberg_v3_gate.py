@@ -30,7 +30,7 @@ def _mk_v3(spark, path: str, mutate=None) -> None:
         .select(F.col("id"), (F.col("id") % 3).alias("k")),
         path,
     )
-    cur_v, meta = ice._current_metadata(path)
+    _cur_v, meta = ice._current_metadata(path)
     meta = dict(meta)
     meta["format-version"] = 3
     meta["next-row-id"] = 6  # row lineage metadata: read-harmless
@@ -38,7 +38,7 @@ def _mk_v3(spark, path: str, mutate=None) -> None:
         s["first-row-id"] = 0
     if mutate:
         mutate(meta)
-    ice._write_metadata_version(path, cur_v + 1, meta)
+    ice._commit_metadata(path, lambda _v, _m: meta)
 
 
 def test_v3_with_v2_features_reads(spark, tmp_path):
@@ -121,7 +121,7 @@ def test_v3_initial_default_materializes_on_read(spark, tmp_path):
     ice.write_iceberg(
         spark.range(3, 6).coalesce(1).select(F.col("id")), p
     )
-    cur_v, meta = ice._current_metadata(p)
+    _cur_v, meta = ice._current_metadata(p)
     newf = next(
         d
         for d in ice._snapshot_files(p, meta, None)[0]
@@ -144,7 +144,7 @@ def test_v3_initial_default_materializes_on_read(spark, tmp_path):
     meta2["format-version"] = 3
     meta2["next-row-id"] = 6
     _add_default(meta2)
-    ice._write_metadata_version(p, cur_v + 1, meta2)
+    ice._commit_metadata(p, lambda _v, _m: meta2)
     rows = {
         r.id: r.tag for r in ice.read_iceberg(spark, p).collect()
     }
@@ -205,7 +205,7 @@ def _mk_v3_dv_table(spark, path: str):
         .select(F.col("id"), (F.col("id") % 3).alias("k")),
         path,
     )
-    cur_v, meta = ice._current_metadata(path)
+    _cur_v, meta = ice._current_metadata(path)
     data_file = next(
         d["file_path"]
         for d in ice._snapshot_files(path, meta, None)[0]
@@ -255,12 +255,12 @@ def _mk_v3_dv_table(spark, path: str):
         "content_offset": int(blob_meta["offset"]),
         "content_size_in_bytes": int(blob_meta["length"]),
     }
-    ice._commit_delete_snapshot(path, meta, cur_v, [dv_entry], schema)
-    cur_v2, meta2 = ice._current_metadata(path)
+    ice._commit_delete_snapshot(path, [dv_entry], schema)
+    _cur_v2, meta2 = ice._current_metadata(path)
     meta3 = dict(meta2)
     meta3["format-version"] = 3
     meta3["next-row-id"] = 10
-    ice._write_metadata_version(path, cur_v2 + 1, meta3)
+    ice._commit_metadata(path, lambda _v, _m: meta3)
 
 
 def test_v3_deletion_vectors_read_on_scan_path(spark, tmp_path):
@@ -384,7 +384,7 @@ def _mk_v3_lineage_table(spark, path: str, materialized: bool = False):
             s["first-row-id"] = 100
         snaps.append(s)
     meta2["snapshots"] = snaps
-    ice._write_metadata_version(path, cur_v + 1, meta2)
+    ice._commit_metadata(path, lambda _v, _m: meta2)
 
 
 def test_v3_row_lineage_read_through(spark, tmp_path):
@@ -665,10 +665,10 @@ def test_v3_dml_over_initial_default_columns(spark, tmp_path):
         spark.range(4).coalesce(1).select(F.col("id")), p,
         format_version=3,
     )
-    cur_v, meta = ice._current_metadata(p)
+    _cur_v, meta = ice._current_metadata(p)
     meta2 = dict(meta)
     _add_default(meta2)  # tag string, initial-default 'legacy'
-    ice._write_metadata_version(p, cur_v + 1, meta2)
+    ice._commit_metadata(p, lambda _v, _m: meta2)
     # read composes defaults + lineage
     rows = {
         r.id: (r.tag, r._row_id)
@@ -801,7 +801,7 @@ def test_v3_write_default_fills_appends(spark, tmp_path):
         spark.range(3).coalesce(1).select(F.col("id")), p,
         format_version=3,
     )
-    cur_v, meta = ice._current_metadata(p)
+    _cur_v, meta = ice._current_metadata(p)
     meta2 = dict(meta)
     sid = meta2.get("current-schema-id", 0)
     sch = next(
@@ -811,7 +811,7 @@ def test_v3_write_default_fills_appends(spark, tmp_path):
         {"id": 99, "name": "tag", "required": False, "type": "string",
          "initial-default": "legacy", "write-default": "filled"}
     ]
-    ice._write_metadata_version(p, cur_v + 1, meta2)
+    ice._commit_metadata(p, lambda _v, _m: meta2)
     # append WITHOUT tag: write-default fills it
     ice.write_iceberg(
         spark.range(3, 5).coalesce(1).select(F.col("id")), p
